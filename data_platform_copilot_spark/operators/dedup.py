@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 
 from ..functions.text import normalize_text, tokens
 from ..functions.vectors import cosine_similarity
-from ..sources.registry import spread
+from ..sources.registry import materialize_auto, spread
 
 
 def exact_duplicates(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -177,36 +177,21 @@ def shingles(df: DataFrame, id_col: str, text_col: str,
 
 
 def jaccard_pairs(sh: DataFrame, threshold: float = 0.8,
-                  max_shingle_freq: int | None = 1000,
-                  materialize: str | None = "auto") -> DataFrame:
+                  max_shingle_freq: int | None = 1000) -> DataFrame:
     """All-pairs n-gram Jaccard >= threshold via inverted-index
     self-join on the shingle. Input: (id, shingle) distinct.
 
     Output: (id_a, id_b, common, size_a, size_b, jaccard), id_a < id_b.
 
-    ``materialize`` controls how the filtered shingle set (which
-    feeds FOUR subtrees — sizes + both join sides, recomputed 4x
-    otherwise) is shared: ``"checkpoint"`` = lazy localCheckpoint
-    (cheapest, but executor-local blocks are NOT recomputable — an
-    executor loss under dynamic allocation fails the job);
-    ``"persist"`` = MEMORY_AND_DISK persist, lineage stays
-    recomputable (the cluster-safe choice); ``None`` = no sharing;
-    ``"auto"`` (default) = checkpoint on local masters, persist on
-    clusters.
+    The filtered shingle set feeds FOUR subtrees (sizes + both join
+    sides, recomputed 4x otherwise), so it is shared once through
+    ``materialize_auto``.
     """
     if max_shingle_freq is not None:
         hot = (sh.groupBy("shingle").count()
                .where(F.col("count") > max_shingle_freq).select("shingle"))
         sh = sh.join(hot, "shingle", "left_anti")
-    if materialize == "auto":
-        is_local = sh.sparkSession.conf.get("spark.master",
-                                            "local").startswith("local")
-        materialize = "checkpoint" if is_local else "persist"
-    if materialize == "checkpoint":
-        sh = sh.localCheckpoint(eager=False)
-    elif materialize == "persist":
-        from pyspark import StorageLevel
-        sh = sh.persist(StorageLevel.MEMORY_AND_DISK)
+    sh = materialize_auto(sh)
     sizes = sh.groupBy("id").agg(F.count("*").alias("size"))
     a = sh.select(F.col("id").alias("id_a"), "shingle")
     b = sh.select(F.col("id").alias("id_b"), "shingle")
@@ -1029,7 +1014,7 @@ def containment_pairs(sh: DataFrame, threshold: float = 0.9,
     ``jaccard_pairs`` (Broder's containment): a short document
     embedded verbatim in a long one has containment ~1.0 while its
     Jaccard can be arbitrarily small, so symmetric dedup misses it.
-    Same inverted-index plumbing and hot-shingle/materialize knobs."""
+    Same inverted-index plumbing and hot-shingle knob."""
     pairs = jaccard_pairs(sh, threshold=0.0, **kwargs)
     cont = F.col("common") / F.least("size_a", "size_b")
     return (pairs.withColumn("containment", cont)
@@ -1068,18 +1053,12 @@ def prefix_filter_pairs(sh: DataFrame, threshold: float = 0.5) -> DataFrame:
     postings, so its cost is |candidates|, not
     |candidates| x set_size. The shingle frame feeds three subtrees
     (frequencies, prefix index, set arrays) and is materialized once
-    — checkpoint on local masters, recomputable persist on clusters.
-    No quadratic stage, no broadcast of the corpus.
+    through ``materialize_auto``. No quadratic stage, no broadcast of
+    the corpus.
     """
     from pyspark.sql import Window as W
 
-    is_local = sh.sparkSession.conf.get("spark.master",
-                                        "local").startswith("local")
-    if is_local:
-        sh = sh.localCheckpoint(eager=False)
-    else:
-        from pyspark import StorageLevel
-        sh = sh.persist(StorageLevel.MEMORY_AND_DISK)
+    sh = materialize_auto(sh)
 
     freq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
     ranked = sh.join(freq, "shingle")

@@ -40,7 +40,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..sources.registry import truncate_lineage
+from ..sources.registry import _is_local, materialize_auto, truncate_lineage
 
 _CHECKPOINT_EVERY = 4
 
@@ -223,8 +223,7 @@ def pagerank(pairs: DataFrame, src: str = "id_a", dst: str = "id_b",
                               + F.lit(damping)
                               * F.coalesce("s", F.lit(0.0)))
                              .alias("rank")))
-            if edges.sparkSession.conf.get(
-                    "spark.master", "local").startswith("local"):
+            if _is_local(edges.sparkSession):
                 ranks = truncate_lineage(ranks, eager=False)
         return ranks
     finally:
@@ -259,14 +258,8 @@ def triangle_stats(pairs: DataFrame, src: str = "id_a",
          .where(F.col("a") != F.col("b")).distinct())
     # e feeds three subtrees (degrees, orientation join, closing-edge
     # probe); materialize once so an expensive upstream (e.g. a kNN
-    # join) isn't re-executed per subtree — checkpoint locally,
-    # recomputable persist on clusters (same policy as jaccard_pairs).
-    if pairs.sparkSession.conf.get("spark.master",
-                                   "local").startswith("local"):
-        e = e.localCheckpoint(eager=False)
-    else:
-        from pyspark import StorageLevel
-        e = e.persist(StorageLevel.MEMORY_AND_DISK)
+    # join) isn't re-executed per subtree.
+    e = materialize_auto(e)
     deg = (e.select(F.col("a").alias("v"))
            .unionAll(e.select(F.col("b").alias("v")))
            .groupBy("v").agg(F.count(F.lit(1)).alias("deg")))

@@ -338,10 +338,15 @@ def bucketed_exact_percentiles(df: DataFrame, part_cols: list[str],
            .select("__pp", "__pi", "__pos",
                    F.floor("__pos").alias("__lo"),
                    F.ceil("__pos").alias("__hi")))
+    # An all-NULL group (n = 0) has pos = -p: at p = 1.0 both neighbor
+    # ranks would be 0 and locate no bucket, dropping the group.
+    # Clamping to rank 1 lands on the NULL sentinel bucket (the
+    # aggregate's NULL answer); for n >= 1, pos >= 0 and it is a no-op.
     ranks = tgt.select(
         "__pp", "__pi", "__pos", "__lo", "__hi",
-        F.explode(F.array_distinct(
-            F.array(F.col("__lo") + 1, F.col("__hi") + 1))).alias("__rank"))
+        F.explode(F.array_distinct(F.array(
+            F.greatest(F.col("__lo") + 1, F.lit(1)),
+            F.greatest(F.col("__hi") + 1, F.lit(1))))).alias("__rank"))
     located = (ranks.join(offs, "__pp")
                .where((F.col("__off") < F.col("__rank"))
                       & (F.col("__rank") <= F.col("__off") + F.col("__c"))))

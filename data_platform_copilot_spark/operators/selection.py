@@ -32,7 +32,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import tokens
-from ..sources.registry import spread
+from ..sources.registry import materialize_auto, spread
 from .quality import _grams
 
 
@@ -313,8 +313,8 @@ def vocab_coverage(df: DataFrame, id_col: str, text_col: str,
             .orderBy("v"))
 
 
-def heavy_hitters(df: DataFrame, text_col: str, phi: float = 0.002,
-                  persist_tokens: bool = True) -> DataFrame:
+def heavy_hitters(df: DataFrame, text_col: str,
+                  phi: float = 0.002) -> DataFrame:
     """EXACT corpus heavy hitters (tokens with frequency >= phi of
     all tokens) by the standard two-phase distributed design:
 
@@ -329,8 +329,8 @@ def heavy_hitters(df: DataFrame, text_col: str, phi: float = 0.002,
     kilobytes of candidates per partition. The SAME pass also emits
     one per-partition token-total row, so the corpus total costs
     kilobytes of side output instead of its own tokenize+count scan;
-    the tiny summary frame (O(partitions/phi) rows) is persisted so
-    the candidate branch and the total branch share one execution.
+    the summary folds into ONE row (candidate set + corpus total), so
+    the MG pass has a single consumer and needs no sharing.
 
     Phase 2 — exact recount of candidates only (broadcast candidate
     set filters the token stream, |candidates|-key combine), then
@@ -342,14 +342,9 @@ def heavy_hitters(df: DataFrame, text_col: str, phi: float = 0.002,
 
     The recount is the only second look at the token stream — two
     tokenizations is the floor for exact two-phase (candidates must
-    exist before they can be recounted). ``persist_tokens=True``
-    (default) shares the exploded stream between the passes with the
-    engine-standard materialization gate (``jaccard_pairs``' rule:
-    lazy localCheckpoint on local masters, recomputable
-    MEMORY_AND_DISK persist on clusters) so the recount reads the
-    cache instead of re-tokenizing; at extreme scale where spilling
-    the token stream would cost more than re-deriving it, pass
-    ``False`` to recompute.
+    exist before they can be recounted). The exploded stream is
+    shared between the passes through ``materialize_auto``, so the
+    recount reads the materialized tokens instead of re-tokenizing.
 
     Returns (tok, n, freq) — freq = n / total tokens.
     """
@@ -358,14 +353,7 @@ def heavy_hitters(df: DataFrame, text_col: str, phi: float = 0.002,
     capacity = max(1, math.ceil(1.0 / phi))
     toks = spread(df.select(tokens(F.col(text_col)).alias("t"))).select(
         F.explode("t").alias("tok"))
-    if persist_tokens:
-        is_local = df.sparkSession.conf.get(
-            "spark.master", "local").startswith("local")
-        if is_local:
-            toks = toks.localCheckpoint(eager=False)
-        else:
-            from pyspark import StorageLevel
-            toks = toks.persist(StorageLevel.MEMORY_AND_DISK)
+    toks = materialize_auto(toks)
 
     def mg(batches):
         import pandas as pd
@@ -391,14 +379,13 @@ def heavy_hitters(df: DataFrame, text_col: str, phi: float = 0.002,
             "part_n": pd.array([None] * len(cand) + [n_part],
                                dtype="Int64")})
 
-    summary = toks.mapInPandas(mg, "tok string, part_n long").persist()
-    cands = (summary.where(F.col("tok").isNotNull())
-             .select("tok").distinct())
-    total = (summary.where(F.col("part_n").isNotNull())
-             .agg(F.sum("part_n").alias("n_total")))
+    summary = (toks.mapInPandas(mg, "tok string, part_n long")
+               .agg(F.collect_set("tok").alias("cands"),
+                    F.sum("part_n").alias("n_total")))
+    cands = summary.select(F.explode("cands").alias("tok"), "n_total")
     counted = (toks.join(F.broadcast(cands), "tok")
-               .groupBy("tok").agg(F.count("*").alias("n")))
-    return (counted.crossJoin(F.broadcast(total))
+               .groupBy("tok", "n_total").agg(F.count("*").alias("n")))
+    return (counted
             .where(F.col("n") >= F.ceil(F.col("n_total") * phi))
             .select("tok", "n",
                     (F.col("n") / F.col("n_total")).alias("freq")))

@@ -32,6 +32,8 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..sources.registry import materialize_auto
+
 _SUPPORTED = ("inner", "left", "left_semi")
 
 
@@ -79,10 +81,10 @@ def salted_join(large: DataFrame, small: DataFrame, key: str,
         raise ValueError(
             f"salted_join supports {_SUPPORTED}, got {how!r}: outer "
             "joins would duplicate unmatched build rows per salt")
-    # The hot set feeds three joins (l_hot / l_cold / s_hot); persist it
+    # The hot set feeds three joins (l_hot / l_cold / s_hot); share it
     # so the detection histogram scans `large` once, not three times.
-    hot = F.broadcast(_hot_key_set(large, key, hot_keys, min_freq)
-                      .persist())
+    hot = F.broadcast(materialize_auto(
+        _hot_key_set(large, key, hot_keys, min_freq)))
 
     l_hot = large.join(hot, key, "left_semi")
     l_cold = large.join(hot, key, "left_anti")

@@ -943,15 +943,10 @@ def knn_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounds."""
     from ..operators.graph import label_propagation
     from ..operators.similarity import knn_join
-    from ..sources.registry import spread
+    from ..sources.registry import materialize_auto, spread
     emb = spread(_t(spark, sf_dir, "embeddings"))
-    knn = knn_join(emb, "vec_id", "embedding",
-                   k=3, n_planes=6, tables=4, dim=64, seed=42)
-    if spark.conf.get("spark.master", "local").startswith("local"):
-        knn = knn.localCheckpoint(eager=False)
-    else:
-        from pyspark import StorageLevel
-        knn = knn.persist(StorageLevel.MEMORY_AND_DISK)
+    knn = materialize_auto(knn_join(emb, "vec_id", "embedding", k=3,
+                                    n_planes=6, tables=4, dim=64, seed=42))
     seeds = emb.where(F.col("vec_id") % 5 == 0).select("vec_id", "label")
     fin = label_propagation(
         knn.select("query_id", "neighbor_id"), seeds, rounds=2)
@@ -1017,12 +1012,10 @@ def knn_kcore_peel_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     and must match the whole trajectory, not just the fixpoint."""
     from ..operators.graph import kcore_peel
     from ..operators.similarity import knn_join
-    from ..sources.registry import spread
+    from ..sources.registry import materialize_auto, spread
     emb = spread(_t(spark, sf_dir, "embeddings"))
-    knn = knn_join(emb, "vec_id", "embedding",
-                   k=3, n_planes=6, tables=4, dim=64, seed=42)
-    if spark.conf.get("spark.master", "local").startswith("local"):
-        knn = knn.localCheckpoint(eager=False)
+    knn = materialize_auto(knn_join(emb, "vec_id", "embedding", k=3,
+                                    n_planes=6, tables=4, dim=64, seed=42))
     return kcore_peel(
         knn.where(F.col("query_id") != F.col("neighbor_id")),
         k=4, rounds=6, src="query_id", dst="neighbor_id")

@@ -20,7 +20,7 @@ from ..functions.text import (
     stopword_ratio,
     tokens,
 )
-from ..sources.registry import spread
+from ..sources.registry import materialize_auto, spread
 from .core import _t, query, rnd
 
 # DuckDB fragment: the same canonical text form as normalize_text().
@@ -1198,7 +1198,7 @@ def lang_id_prf_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     cm = (d.select(F.col("lang").alias("labeled"),
                    predicted_lang(F.col("text")).alias("predicted"))
           .groupBy("labeled", "predicted").agg(F.count("*").alias("n")))
-    cm = cm.localCheckpoint(eager=False)  # tiny; feeds four subtrees
+    cm = materialize_auto(cm)  # tiny; feeds four subtrees
     tp = (cm.where(F.col("labeled") == F.col("predicted"))
           .groupBy(F.col("labeled").alias("lang"))
           .agg(F.sum("n").alias("tp")))
@@ -1493,7 +1493,6 @@ def domain_unigram_js(spark: SparkSession, sf_dir: str) -> DataFrame:
     both pair sides) and everything after is vocabulary-bound."""
     from pyspark.sql import Window as W
 
-    from ..sources.registry import materialize_auto
     docs = _t(spark, sf_dir, "documents")
     tk = docs.select("source", F.explode(tokens(F.col("text")))
                      .alias("tok"))

@@ -90,27 +90,6 @@ def warm_tables(spark: SparkSession, sf_dir: str,
         _WARM[key] = df
 
 
-def warm_view(spark: SparkSession, sf_dir: str, name: str,
-              builder) -> DataFrame:
-    """Plan reuse for a derived view: build the (pure-lazy) DataFrame
-    once per (app, sf_dir, name) and return the same analyzed plan on
-    later calls — the derived-view analogue of ``warm_tables``.
-
-    This caches the PLAN, never results: the builder must return a
-    frame with no persist/localCheckpoint anywhere in it, so every
-    execution re-runs the full pipeline (a warm service holds exactly
-    such long-lived DataFrames instead of re-assembling the py4j
-    expression tree per request; for Arrow-stage-heavy plans the
-    rebuild costs ~0.2 s per call — pure driver bookkeeping that says
-    nothing about engine throughput). Correctness paths are
-    indifferent: a memo hit returns the identical immutable plan."""
-    key = (spark.sparkContext.applicationId, sf_dir, f"view:{name}")
-    got = _WARM.get(key)
-    if got is None:
-        got = _WARM[key] = builder()
-    return got
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one warehouse table from ``{sf_dir}/{name}.parquet``."""
     # The warehouse contract is UTC (reference stores UTC; the DuckDB
@@ -170,7 +149,7 @@ def spread(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     the `.rdd` lineage materialization the probe requires.
     """
     sc = df.sparkSession.sparkContext
-    if not sc.master.startswith("local"):
+    if not _is_local(df.sparkSession):
         return df
     target = min_partitions or sc.defaultParallelism
     # The .rdd partition probe builds a fresh JVM RDD lineage per
@@ -193,14 +172,22 @@ def spread(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     return df
 
 
+def _is_local(spark: SparkSession) -> bool:
+    """True on a ``local[...]`` master. Outside ``session.get_spark``
+    this is the only local-vs-cluster test in the package."""
+    return spark.sparkContext.master.startswith("local")
+
+
 def materialize_auto(df: DataFrame) -> DataFrame:
     """Share a frame that feeds multiple downstream subtrees without
-    recomputing it per consumer — the engine-standard gate (same rule
-    as ``operators.dedup.jaccard_pairs``): lazy localCheckpoint on
-    local masters (cheapest; executor-local blocks), recomputable
-    MEMORY_AND_DISK persist on clusters (an executor loss under
-    dynamic allocation must not fail the job — a localCheckpoint has
-    no recompute path, so losing its blocks kills the query).
+    recomputing it per consumer — the single sharing gate: no other
+    module picks checkpoint or persist for a shared frame. Lazy
+    localCheckpoint on local masters (cheapest; executor-local
+    blocks), recomputable MEMORY_AND_DISK persist on clusters (an
+    executor loss under dynamic allocation must not fail the job — a
+    localCheckpoint has no recompute path, so losing its blocks kills
+    the query). Iteration state that must cut its lineage every round
+    uses ``truncate_lineage`` instead.
 
     KNOWN CLUSTER-MODE LEAK (r14 ADVICE, accepted trade-off): the
     cluster path never unpersists, so each invocation of a query
@@ -212,7 +199,7 @@ def materialize_auto(df: DataFrame) -> DataFrame:
     ``spark.catalog.clearCache()`` between requests. Local masters
     (every bench/probe path) take the localCheckpoint branch and do
     not leak — the r14 bench de-gaming covered exactly that path."""
-    if df.sparkSession.sparkContext.master.startswith("local"):
+    if _is_local(df.sparkSession):
         return df.localCheckpoint(eager=False)
     from pyspark import StorageLevel
     return df.persist(StorageLevel.MEMORY_AND_DISK)

@@ -3274,16 +3274,19 @@ class TestBucketedExactPercentiles:
     def test_all_null_group_emits_null_row(self, spark):
         # r15 (r14 verdict #5): an all-NULL group now gets the same
         # NULL output row the percentile aggregate emits, instead of
-        # being silently omitted — the contract delta is closed
+        # being silently omitted — the contract delta is closed.
+        # p = 1.0 puts an empty group's position at -1, the edge that
+        # once located no bucket and dropped the group.
         from data_platform_copilot_spark.operators.layout import (
             bucketed_exact_percentiles)
         df = spark.createDataFrame(
             [("a", 1.0), ("a", 3.0), ("z", None)],
             "g string, v double")
-        got = bucketed_exact_percentiles(df, ["g"], "v", [0.5],
-                                         out_prefix="n").collect()
-        assert sorted((r["g"], r["n0"]) for r in got) \
-            == [("a", 2.0), ("z", None)]
+        for pct, a in ((0.5, 2.0), (1.0, 3.0)):
+            got = bucketed_exact_percentiles(df, ["g"], "v", [pct],
+                                             out_prefix="n").collect()
+            assert sorted((r["g"], r["n0"]) for r in got) \
+                == [("a", a), ("z", None)], pct
 
     def test_nan_values_raise(self, spark):
         # r15 (ADVICE): floor(NaN) silently buckets to 0 in non-ANSI
