@@ -70,20 +70,11 @@ def main() -> None:
     # throughput profile: AQE on, full shuffle parallelism).
     spark = get_spark("bench", master=os.environ.get("SPARK_GRAFT_MASTER"))
 
-    # Warmup: PLAN-only table warming (memoized analyzed frames — no
-    # data caching), then run the flagship once for JVM warm-in.
-    # r14 methodology fix: rounds 10-13 passed persist=True here,
-    # which materialized every base table into the block-manager
-    # cache BEFORE the timed region — timed runs then read RAM, not
-    # the parquet inputs, and (via the CacheManager's plan matching)
-    # never paid the scan. Every timed run now computes from the
-    # parquet files, like the DuckDB proxy it is graded against
-    # (views over the same files). Same-commit A/B decomposition is
-    # recorded in BASELINE.md §"Bench methodology log (r14)";
-    # comparing an r14+ total to r10-r13 artifacts MUST bridge
-    # through that note.
-    from data_platform_copilot_spark.sources import warm_tables
-    warm_tables(spark, sf_dir, persist=False)
+    # Warmup: run the flagship once for JVM warm-in. Every timed run
+    # builds its plan anew and computes from the parquet files, like
+    # the DuckDB proxy it is graded against (views over the same
+    # files). Comparing totals across methodology changes MUST bridge
+    # through BENCH.md's change log.
     QUERIES["flagship_revenue_by_nation"](spark, sf_dir).collect()
     # Spawn the reusable Python worker pool once (Arrow stages pay
     # ~2.5s of process startup on first use; the pool persists via

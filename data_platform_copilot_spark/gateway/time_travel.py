@@ -90,14 +90,22 @@ def register_versioned_table(spark: SparkSession, name: str,
     snapshot as a temp view of that name (catalog visibility for
     non-gateway readers; gateway queries re-resolve latest per
     statement). Returns the latest version. Re-registering refreshes
-    the latest-view."""
+    the latest-view; re-registering to another directory also drops
+    the name's cached snapshot views, which are keyed by name and
+    version and would otherwise keep serving the old table."""
     if not re.fullmatch(_IDENT, name):
         raise VersionedTableError(f"invalid table name: {name!r}")
     v = latest_version(table_dir)
     if v is None:
         raise VersionedTableError(f"not a versioned table: {table_dir}")
     read_version(spark, table_dir).createOrReplaceTempView(name)
-    _VERSIONED_TABLES[name.lower()] = str(table_dir)
+    key = name.lower()
+    if _VERSIONED_TABLES.get(key, str(table_dir)) != str(table_dir):
+        stale = re.compile(rf"{key}__(?:asof_|v)\d+(?:__p\w+)?")
+        for view in [w for w in _CREATED_VIEWS if stale.fullmatch(w)]:
+            _CREATED_VIEWS.remove(view)
+            spark.catalog.dropTempView(view)
+    _VERSIONED_TABLES[key] = str(table_dir)
     return v
 
 

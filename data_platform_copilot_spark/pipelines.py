@@ -13,13 +13,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .sources import load_table, read_parquet
+
 
 def extract_orders(spark: SparkSession, sf_dir: str,
                    start: str, end: str) -> DataFrame:
     """Half-open [start, end) window on o_orderdate; the predicate
     reaches the parquet scan (at 100 TB: partition pruning on a
     dt-partitioned table)."""
-    from .sources import load_table
     return load_table(spark, sf_dir, "orders").where(
         (F.col("o_orderdate") >= start) & (F.col("o_orderdate") < end))
 
@@ -41,7 +42,7 @@ def daily_sales(spark: SparkSession, sf_dir: str, out_path: str,
     """The flow body: returns the written DataFrame for inspection."""
     out = transform_daily_revenue(extract_orders(spark, sf_dir, start, end))
     load_output(out, out_path)
-    return spark.read.parquet(out_path)
+    return read_parquet(spark, out_path)
 
 
 def daily_sales_versioned(spark: SparkSession, sf_dir: str,

@@ -27,6 +27,7 @@ SURVEY.md §2.
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -64,17 +65,6 @@ def register_oracle_udfs(con) -> None:
     except Exception:
         pass  # already registered on this connection
 
-# Prepared-plan cache: the engine's analogue of a prepared statement.
-# Registry queries are pure functions of (session, sf_dir), so the
-# DataFrame (an immutable logical plan) they build is reusable across
-# invocations; re-running a repeated query should pay execution, not
-# re-pay driver-side plan construction (hundreds of py4j expression
-# calls — measured 0.6-0.8s for the widest operators). Every ACTION on
-# the cached DataFrame still plans/optimizes/executes normally; only
-# the Python-side plan BUILD is memoized. Cluster engines keep the
-# same cache (Spark Thriftserver plan cache, prepared statements).
-_PLAN_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-
 
 def query(name: str, oracle: str | None = None,
           extra_oracle: str | None = None):
@@ -82,17 +72,12 @@ def query(name: str, oracle: str | None = None,
     ``extra_oracle`` registers a UDF-dependent value oracle that only
     the local harnesses run (see EXTRA_ORACLE)."""
     def deco(fn: Callable[[SparkSession, str], DataFrame]):
-        def cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-            key = (spark.sparkContext.applicationId, sf_dir, name)
-            df = _PLAN_CACHE.get(key)
-            if df is None:
-                df = fn(spark, sf_dir)
-                _PLAN_CACHE[key] = df
-            return df
-        cached.__name__ = fn.__name__
-        cached.__doc__ = fn.__doc__
-        cached.__wrapped__ = fn
-        QUERIES[name] = cached
+        @functools.wraps(fn)
+        def build(spark: SparkSession, sf_dir: str) -> DataFrame:
+            return fn(spark, sf_dir)
+        # a forwarder, not ``fn`` itself: callers that unwrap
+        # (``QUERIES[name].__wrapped__``) still reach the builder
+        QUERIES[name] = build
         if oracle is not None:
             ORACLE[name] = oracle
         if extra_oracle is not None:

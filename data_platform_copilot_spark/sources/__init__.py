@@ -5,8 +5,8 @@ from .batch_source import (
 from .registry import (
     TESTDATA_TABLES,
     load_table,
+    read_parquet,
     register_testdata,
-    warm_tables,
 )
 from .versioned import (
     CommitConflict,
@@ -24,8 +24,8 @@ from .versioned import (
     write_version,
 )
 
-__all__ = ["TESTDATA_TABLES", "load_table", "register_testdata",
-           "warm_tables", "write_version", "read_version",
+__all__ = ["TESTDATA_TABLES", "load_table", "read_parquet",
+           "register_testdata", "write_version", "read_version",
            "merge_version", "compact", "vacuum", "history",
            "latest_version", "diff_versions", "evolve_partitioning",
            "evolve_schema",

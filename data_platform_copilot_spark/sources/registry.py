@@ -14,6 +14,9 @@ nothing above this layer changes.
 
 from __future__ import annotations
 
+import functools
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -30,64 +33,70 @@ TESTDATA_TABLES = (
 _NANOS_TS_COLUMNS = {"events": ("ts",)}
 
 
-# Warm-table registry: (applicationId, sf_dir, name) -> DataFrame.
-# Populated by warm_tables(); load_table returns the warm copy when
-# present, so repeated queries against the same sf_dir reuse one
-# analyzed (and optionally memory-persisted) plan instead of
-# re-listing parquet and re-probing partitioning every call. This is
-# the local-mode analogue of a cluster's long-lived table catalog +
-# buffer cache; correctness paths never require it.
-_WARM: dict[tuple[str, str, str], DataFrame] = {}
+def read_parquet(spark: SparkSession, paths: str | list[str],
+                 schema: str | None = None) -> DataFrame:
+    """The package's one parquet read. Spark infers a missing schema
+    with a job per read; here it comes from metadata: the caller's
+    DDL ``schema`` (versioned tables pass their manifest's), else the
+    footer of the first data file in path order — the file Spark's
+    non-merging inference reads. Paths the driver cannot list (object
+    stores, globs, missing paths) and footers with no Spark mapping
+    fall back to Spark's inference."""
+    paths = [paths] if isinstance(paths, str) else list(paths)
+    if not schema:
+        first = next((f for p in paths for f in _data_files(p)), None)
+        footer = None
+        if first is not None:
+            st = os.stat(first)
+            footer = _footer_schema(first, st.st_mtime_ns, st.st_size)
+        if footer is None:
+            return spark.read.parquet(*paths)
+        schema, nanos = footer
+        if nanos:  # runtime-settable: holds on sessions we did not build
+            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    return spark.read.schema(schema).parquet(*paths)
 
 
-def warm_tables(spark: SparkSession, sf_dir: str,
-                tables: tuple[str, ...] = TESTDATA_TABLES,
-                persist: bool = True) -> None:
-    """Pre-load every table once. Two modes:
+def _data_files(path: str):
+    """Files Spark lists under ``path``, in path order: ``.``/``_``
+    names (``_SUCCESS``, ``.crc``) are hidden, ``k=v`` dirs are not."""
+    def shown(n: str) -> bool:
+        return not (n[0] == "." or (n[0] == "_" and "=" not in n))
+    if os.path.isfile(path):
+        yield path
+    for root, dirs, files in os.walk(path):
+        dirs[:] = sorted(filter(shown, dirs))
+        yield from (os.path.join(root, f)
+                    for f in sorted(filter(shown, files)))
 
-    ``persist=False`` (the bench mode since r14): PLAN-only warming —
-    memoize each table's analyzed frame so repeated queries skip
-    re-listing parquet and re-probing schemas (driver bookkeeping),
-    while every execution still scans the parquet files. No data is
-    cached and no layout repartition is injected, so a warmed frame
-    plans exactly like the cold ``load_table`` path. This is the mode
-    benchmarks must use: timed runs compute from the inputs
-    (BENCH.md r14 change-log entry has the same-commit A/B).
 
-    ``persist=True``: additionally materialize the SPREAD layout into
-    the block-manager cache — the state of a cluster whose buffer
-    cache holds the working set with properly-sized splits. Probes
-    that isolate NON-scan costs (straggler sweep, fair-pool overlap)
-    use it; the graded bench does not. Idempotent per (app, sf_dir).
-    """
-    app = spark.sparkContext.applicationId
-    for name in tables:
-        key = (app, sf_dir, name)
-        got = _WARM.get(key)
-        if got is not None:
-            # r14 ADVICE: the memo used to ignore the persist flag, so
-            # a persist=True call after a plan-only warm silently
-            # no-opped and probes expecting cached tables measured
-            # unpersisted scans. A plan-only entry is now UPGRADED to
-            # the persisted layout when persist=True asks for it; the
-            # reverse (plan-only after persisted) keeps the persisted
-            # frame — persist=True probes opted into cache semantics
-            # for the whole session.
-            already = (got.storageLevel.useMemory
-                       or got.storageLevel.useDisk)
-            if not persist or already:
-                continue
-            _WARM.pop(key)
-        if persist:
-            # Persist the SPREAD layout: the testdata files are single
-            # row-group (1 partition); caching them pre-repartitioned
-            # means every downstream spread() is a no-op and parallel
-            # stages start parallel.
-            df = spread(load_table(spark, sf_dir, name)).persist()
-            df.count()
+@functools.lru_cache(maxsize=1024)
+def _footer_schema(path: str, mtime_ns: int, size: int
+                   ) -> tuple[T.StructType, bool] | None:
+    """(schema Spark 4 infers for one parquet file, whether it holds
+    TIMESTAMP(NANOS)), from the footer; memoized on file identity.
+    Naive timestamps are NTZ, INT96 is TIMESTAMP, and NANOS is a long
+    (``spark.sql.legacy.parquet.nanosAsLong``). None when a column
+    has no Spark mapping."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_type
+
+    pf = pq.ParquetFile(path)
+    int96 = {c.path for c in pf.schema if c.physical_type == "INT96"}
+    fields, nanos = [], False
+    for f in pf.schema_arrow:
+        if f.name in int96:
+            dt = T.TimestampType()
+        elif pa.types.is_timestamp(f.type) and f.type.unit == "ns":
+            dt, nanos = T.LongType(), True
         else:
-            df = load_table(spark, sf_dir, name)
-        _WARM[key] = df
+            try:
+                dt = from_arrow_type(f.type, prefer_timestamp_ntz=True)
+            except TypeError:  # e.g. unsigned or float16 columns
+                return None
+        fields.append(T.StructField(f.name, dt, f.nullable))
+    return T.StructType(fields), nanos
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -97,17 +106,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # normalization below re-labels naive instants in the SESSION
     # timezone, so pin it here — runtime-settable, and required even
     # on sessions we did not build (e.g. the driver's own session).
-    # Pinned on BOTH the warm and cold paths: the NTZ->LTZ cast is
-    # lazy, so a caller that reset the session timezone after the
-    # cold load would otherwise re-label cached frames' naive
-    # instants under the new zone at execution time.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    warm = _WARM.get((spark.sparkContext.applicationId, sf_dir, name))
-    if warm is not None:
-        return warm
-    if name in _NANOS_TS_COLUMNS:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = read_parquet(spark, f"{sf_dir}/{name}.parquet")
     for col in _NANOS_TS_COLUMNS.get(name, ()):
         if col in df.columns and isinstance(df.schema[col].dataType, T.LongType):
             # Integer `div`, not F.floor(col/1000): the latter routes
@@ -152,21 +152,9 @@ def spread(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     if not _is_local(df.sparkSession):
         return df
     target = min_partitions or sc.defaultParallelism
-    # The .rdd partition probe builds a fresh JVM RDD lineage per
-    # call — measured 4-13 ms of driver bookkeeping (13 ms on the
-    # events table, whose NTZ/nanos rebuild makes the conversion
-    # plan bigger). DataFrames are immutable, so memoize the probe
-    # result on the object: the long-lived warm frames every query
-    # reads (warm_tables) then pay it once per process instead of
-    # once per invocation. Derived frames get a fresh probe, as
-    # before.
-    n = getattr(df, "_graft_npart", None)
-    if n is None:
-        n = df.rdd.getNumPartitions()
-        try:
-            df._graft_npart = n
-        except AttributeError:  # pragma: no cover — slotted impl
-            pass
+    # the .rdd partition probe costs 4-13 ms of driver bookkeeping
+    # per call (a fresh JVM RDD lineage); no job
+    n = df.rdd.getNumPartitions()
     if n * 2 <= target:
         return df.repartition(target)
     return df

@@ -75,6 +75,8 @@ from uuid import uuid4
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .registry import materialize_auto, read_parquet
+
 _HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
 _MAX_COMMIT_RETRIES = 50
 # Write a checkpoint every N commits (the Delta log checkpoint recipe,
@@ -1051,12 +1053,14 @@ def _read_dirs(spark: SparkSession, root: Path, dirs: list[str],
             fp = (tuple(sorted(dir_schemas[d].items())),
                   tuple(sorted((dir_renames.get(d) or {}).items())))
             groups.setdefault(fp, []).append(d)
-        frames = [align(spark.read.parquet(
-                      *[p for d in g for p in paths(d)]), g[0])
+        frames = [align(read_parquet(
+                      spark, [p for d in g for p in paths(d)],
+                      _ddl(dir_schemas[g[0]])), g[0])
                   for g in groups.values()]
     else:
         for d in dirs:
-            df = spark.read.parquet(*paths(d))
+            df = read_parquet(spark, paths(d),
+                              _ddl(dir_schemas.get(d) or {}))
             for col, val in _partition_segments(d):
                 df = df.withColumn(
                     col, F.lit(val).cast(schema.get(col, "string")))
@@ -1070,10 +1074,14 @@ def _read_dirs(spark: SparkSession, root: Path, dirs: list[str],
     return out
 
 
+def _ddl(schema: dict[str, str]) -> str:
+    """A manifest schema (column -> ``dtypes`` spelling) as DDL."""
+    return ", ".join(f"`{c}` {t}" for c, t in schema.items())
+
+
 def _empty_frame(spark: SparkSession, manifest: dict) -> DataFrame:
-    ddl = ", ".join(f"`{c}` {t}"
-                    for c, t in manifest.get("schema", {}).items())
-    return spark.createDataFrame([], ddl or "__empty__ int")
+    return spark.createDataFrame(
+        [], _ddl(manifest.get("schema", {})) or "__empty__ int")
 
 
 try:  # subclass hook needs the classic (py4j) DataFrame
@@ -1639,8 +1647,10 @@ def _read_version_at(spark: SparkSession, root: Path, version: int,
                 # have the column with NULLs are handled by the join
                 # itself (NULL never matches a tombstone key).
                 continue
-            tomb = spark.read.parquet(
-                *[str(root / dv["dir"]) for dv in group])
+            key_type = manifest.get("schema", {}).get(key_col)
+            tomb = read_parquet(
+                spark, [str(root / dv["dir"]) for dv in group],
+                key_type and f"`{key_col}` {key_type}")
             # tombstones are one merge batch's distinct keys — small
             # next to the table; broadcast keeps the masked scan
             # shuffle-free (the same reason Delta broadcasts DVs)
@@ -1975,7 +1985,6 @@ def _merge_once(spark: SparkSession, root: Path,
     # (key+partition columns for the touched set; full rows of only
     # the touched partitions for survivors), and caching the full
     # scan would defeat both column and partition pruning.
-    from .registry import materialize_auto
     keys = materialize_auto(updates.select(key).distinct())
     if keys.isEmpty():
         # empty upsert batch (routine in CDC): a no-op returning the
@@ -2152,7 +2161,6 @@ def _merge_mor(spark: SparkSession, root: Path,
     parts = manifest.get("partition_by") or []
     own_schema = dict(updates.dtypes)
     _validate_append(manifest, dict(own_schema), parts or None)
-    from .registry import materialize_auto
     keys = materialize_auto(updates.select(key).distinct())
     if keys.isEmpty():
         return prev  # routine empty CDC batch: no-op (see _merge_once)

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..queries.core import rnd
+from ..sources.registry import load_table, read_parquet
 
 
 def _slot(sf_dir: str) -> str:
@@ -137,10 +138,8 @@ def streaming_events_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     The nanos->micros repair from sources/registry.py is re-applied:
     the stream reads the raw long nanos column.
     """
-    from ..sources.registry import load_table
     batch = load_table(spark, sf_dir, "events")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    raw_schema = read_parquet(spark, f"{sf_dir}/events.parquet").schema
     # FileStreamSource requires a directory; testdata ships one file.
     # Stage a symlink dir (no data copy) under /tmp.
     stage = Path(tempfile.gettempdir()) / f"stream_events_{_slot(sf_dir)}"
@@ -320,7 +319,7 @@ def streaming_documents_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents.parquet as a streaming source (same staged-symlink
     trick as the events source; documents carry no timestamps, so no
     type repair is needed)."""
-    schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
+    schema = read_parquet(spark, f"{sf_dir}/documents.parquet").schema
     stage = Path(tempfile.gettempdir()) / f"stream_docs_{_slot(sf_dir)}"
     stage.mkdir(exist_ok=True)
     link = stage / "documents.parquet"
@@ -350,7 +349,6 @@ def run_streaming_decontamination(spark: SparkSession, sf_dir: str,
     in tests/test_streaming.py.
     """
     from ..operators.dedup import shingle_array
-    from ..sources.registry import load_table
 
     docs_batch = load_table(spark, sf_dir, "documents")
     eval_df = docs_batch.where(F.col("doc_id") % 97 == 0)
@@ -389,7 +387,6 @@ def run_streaming_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB oracle value-verifies the streaming path end to end.
     """
     from ..queries.core import rnd
-    from ..sources.registry import load_table
 
     cutoff = F.lit("2024-01-16").cast("timestamp")
     ev = load_table(spark, sf_dir, "events")
@@ -484,7 +481,6 @@ def run_streaming_incremental_rollup(spark: SparkSession, sf_dir: str,
         merge_agg_states,
         state_report,
     )
-    from ..sources.registry import load_table
 
     stage = (Path(tempfile.gettempdir())
              / f"stream_events_split{n_splits}_{_slot(sf_dir)}")
@@ -493,7 +489,7 @@ def run_streaming_incremental_rollup(spark: SparkSession, sf_dir: str,
             stage, lambda tmp: (load_table(spark, sf_dir, "events")
                                 .repartition(n_splits)
                                 .write.mode("overwrite").parquet(tmp)))
-    schema = spark.read.parquet(str(stage)).schema
+    schema = read_parquet(spark, str(stage)).schema
     stream = (spark.readStream.schema(schema)
               .option("maxFilesPerTrigger", 1)
               .parquet(str(stage)))
@@ -721,8 +717,6 @@ def run_streaming_checkpoint_recovery(spark: SparkSession, sf_dir: str,
     """
     import time as _time
 
-    from ..sources.registry import load_table
-
     root = Path(work_dir or tempfile.mkdtemp(prefix="ckpt_recovery_"))
     src, ckpt = root / "src", root / "ckpt"
     agg_out, log_out = root / "agg", root / "log"
@@ -731,7 +725,7 @@ def run_streaming_checkpoint_recovery(spark: SparkSession, sf_dir: str,
     if not src.exists():
         events.repartition(n_files).write.mode("overwrite").parquet(str(src))
 
-    schema = spark.read.parquet(str(src)).schema
+    schema = read_parquet(spark, str(src)).schema
 
     def build_query():
         stream = (spark.readStream.schema(schema)
@@ -756,7 +750,7 @@ def run_streaming_checkpoint_recovery(spark: SparkSession, sf_dir: str,
 
     def distinct_batches() -> int:
         try:
-            return (spark.read.parquet(str(log_out))
+            return (read_parquet(spark, str(log_out))
                     .select("batch_id").distinct().count())
         except Exception:
             return 0  # log dir not created yet
@@ -780,10 +774,10 @@ def run_streaming_checkpoint_recovery(spark: SparkSession, sf_dir: str,
         q2.stop()
     q2.awaitTermination(30)
 
-    log = (spark.read.parquet(str(log_out))
+    log = (read_parquet(spark, str(log_out))
            .dropDuplicates(["batch_id"]))
     return {
-        "agg": spark.read.parquet(str(agg_out)),
+        "agg": read_parquet(spark, str(agg_out)),
         "log": log,
         "phase1_batches": phase1,
         "total_batches": log.count(),
@@ -818,7 +812,6 @@ def run_streaming_versioned_sink(spark: SparkSession, sf_dir: str,
     the per-batch file spray back to ``target_files`` without
     touching the stream.
     """
-    from ..sources.registry import load_table
     from ..sources.versioned import history, read_version, write_version
 
     # default work dir is deterministic per sf_dir (same pattern as
@@ -839,7 +832,7 @@ def run_streaming_versioned_sink(spark: SparkSession, sf_dir: str,
         _stage_atomically(
             src, lambda tmp: (events.repartition(n_files)
                               .write.mode("overwrite").parquet(tmp)))
-    schema = spark.read.parquet(str(src)).schema
+    schema = read_parquet(spark, str(src)).schema
 
     replay: dict = {}
 
@@ -900,7 +893,6 @@ def run_streaming_mor_upsert_sink(spark: SparkSession, sf_dir: str,
     and ``auto_compact_vectors`` (engine-triggered MoR auto-
     compaction, r11) bounds the stack without operator intervention.
     """
-    from ..sources.registry import load_table
     from ..sources.versioned import (
         compact, history, merge_version, read_version, write_version)
 
@@ -914,7 +906,7 @@ def run_streaming_mor_upsert_sink(spark: SparkSession, sf_dir: str,
         _stage_atomically(
             src, lambda tmp: (events.repartition(n_files)
                               .write.mode("overwrite").parquet(tmp)))
-    schema = spark.read.parquet(str(src)).schema
+    schema = read_parquet(spark, str(src)).schema
 
     replay: dict = {}
 

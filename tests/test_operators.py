@@ -1661,8 +1661,8 @@ class TestBPE:
                .orderBy("merge_rank").collect()]
         assert got == bpe_reference(texts, n_merges=6)
 
-    @pytest.mark.slow
-    def test_batched_is_byte_identical_to_sequential(self, spark, sf_dir):
+    @staticmethod
+    def _assert_batched_is_sequential(spark, sf_dir, n_docs):
         # r15 (r14 verdict #6): batching is EXACT — at every batch the
         # merge table must be byte-identical to batch=1 (sequential
         # Sennrich), not merely to a batched reference replay. The
@@ -1674,7 +1674,7 @@ class TestBPE:
             bpe_train,
         )
         from data_platform_copilot_spark.sources import load_table
-        docs = load_table(spark, sf_dir, "documents").limit(100)
+        docs = load_table(spark, sf_dir, "documents").limit(n_docs)
         texts = [r["text"] for r in docs.select("text").collect()]
         seq = bpe_reference(texts, n_merges=12, batch=1)
         for b in (3, 8):
@@ -1686,6 +1686,15 @@ class TestBPE:
             # within-round acceptance was symbol-disjoint, so all
             # merged outputs are distinct subword units
             assert len({lhs + rhs for _, lhs, rhs, _ in got}) == len(got)
+
+    def test_batched_is_byte_identical_to_sequential_small(
+            self, spark, sf_dir):
+        # the exactness pin in the default lane
+        self._assert_batched_is_sequential(spark, sf_dir, 30)
+
+    @pytest.mark.slow
+    def test_batched_is_byte_identical_to_sequential(self, spark, sf_dir):
+        self._assert_batched_is_sequential(spark, sf_dir, 100)
 
     def test_batched_rounds_are_fewer(self, spark):
         # the point of batching: a vocab-sized run takes fewer driver

@@ -132,7 +132,7 @@ class TestConcurrentQueries:
         """Two registry queries executing concurrently from separate
         threads on the ONE shared session must both return correct
         results — the FAIR-scheduler-ready concurrency contract of a
-        long-lived analytics session (plan cache and job submission
+        long-lived analytics session (plan building and job submission
         are GIL/JVM-safe; nothing is session-mutating per query)."""
         from concurrent.futures import ThreadPoolExecutor
         from data_platform_copilot_spark.queries import QUERIES

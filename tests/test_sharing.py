@@ -43,8 +43,8 @@ def _cache_entries(spark) -> int:
 
 
 def _fresh_rows(spark, sf_dir, name):
-    """Build the entry anew (bypassing the plan cache) and collect."""
-    return normalize_rows(QUERIES[name].__wrapped__(spark, sf_dir).toPandas())
+    """Build the entry anew and collect."""
+    return normalize_rows(QUERIES[name](spark, sf_dir).toPandas())
 
 
 @pytest.fixture
@@ -72,7 +72,7 @@ def test_cluster_branch_matches_local_branch(spark, sf_dir, name, request):
 def test_fresh_builds_leave_no_cache_entry(spark, sf_dir, name):
     before = _cache_entries(spark)
     for _ in range(3):
-        QUERIES[name].__wrapped__(spark, sf_dir).collect()
+        QUERIES[name](spark, sf_dir).collect()
     assert _cache_entries(spark) == before
 
 

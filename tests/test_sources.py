@@ -36,23 +36,59 @@ def test_streaming_source_dtype_matches_batch(spark, sf_dir):
     assert dict(stream.dtypes)["ts"] == "timestamp"
 
 
-def test_warm_tables_persist_upgrades_plan_only_entry(spark, sf_dir):
-    # r14 ADVICE: the warm memo used to ignore the persist flag — a
-    # persist=True warm after a plan-only warm silently no-opped, so
-    # probes expecting cached tables measured unpersisted scans. A
-    # plan-only entry must now upgrade to the persisted layout.
-    from data_platform_copilot_spark.sources.registry import (
-        _WARM, warm_tables)
+def test_nanos_timestamps_truncate_alike_in_batch_and_stream(spark, tmp_path):
+    # No warehouse stores events.ts as TIMESTAMP(NANOS), so this
+    # fixture is what exercises the footer's nanos -> long mapping
+    # and the integer-`div` repair behind it.
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from data_platform_copilot_spark.streaming.events import (
+        streaming_events_source)
+    ns = [1_700_000_000_123_456_789, 1_700_000_000_999_999_999,
+          1_712_345_678_000_000_001, 1_712_345_678_000_000_999]
+    pq.write_table(pa.table({
+        "event_id": pa.array(range(len(ns)), pa.int64()),
+        "ts": pa.array(ns, pa.timestamp("ns"))}),
+        tmp_path / "events.parquet", version="2.6",
+        coerce_timestamps=None)
+    assert pq.read_schema(tmp_path / "events.parquet").field("ts").type \
+        == pa.timestamp("ns")
+    want = sorted(v // 1000 for v in ns)
+
+    batch = load_table(spark, str(tmp_path), "events")
+    assert sorted(r[0] for r in batch.select(
+        F.unix_micros("ts")).collect()) == want
+
+    stream = streaming_events_source(spark, str(tmp_path))
+    q = (stream.select(F.unix_micros("ts").alias("us"))
+         .writeStream.format("memory").queryName("nanos_events").start())
     try:
-        warm_tables(spark, sf_dir, tables=("region",), persist=False)
-        df = load_table(spark, sf_dir, "region")
-        assert not (df.storageLevel.useMemory or df.storageLevel.useDisk)
-        warm_tables(spark, sf_dir, tables=("region",), persist=True)
-        df2 = load_table(spark, sf_dir, "region")
-        assert df2.storageLevel.useMemory or df2.storageLevel.useDisk
+        q.processAllAvailable()
     finally:
-        # leave no cached state behind for other tests
-        app = spark.sparkContext.applicationId
-        got = _WARM.pop((app, sf_dir, "region"), None)
-        if got is not None:
-            got.unpersist()
+        q.stop()
+    assert sorted(r[0] for r in spark.table("nanos_events").collect()) \
+        == want
+
+
+def test_parquet_is_read_only_through_read_parquet():
+    # read_parquet is the one place a parquet schema is decided (from
+    # metadata, never by a Spark inference job); every other read in
+    # the package must go through it
+    import ast
+    from pathlib import Path
+
+    import data_platform_copilot_spark as pkg
+    root = Path(pkg.__file__).parent
+    registry = root / "sources" / "registry.py"
+    helper = next(n for n in ast.walk(ast.parse(registry.read_text()))
+                  if isinstance(n, ast.FunctionDef)
+                  and n.name == "read_parquet")
+    inside = {(registry, i)
+              for i in range(helper.lineno, helper.end_lineno + 1)}
+    hits = [f"{path.relative_to(root)}:{i}"
+            for path in sorted(root.rglob("*.py"))
+            for i, line in enumerate(path.read_text().splitlines(), 1)
+            if ".read.parquet(" in line and (path, i) not in inside]
+    assert not hits, f"parquet reads outside read_parquet: {hits}"

@@ -52,6 +52,24 @@ class TestGatewayTimeTravel:
         assert run.preview[0]["s"] \
             == sum(2 * i for i in range(3, 10)) + 3 * 999
 
+    def test_reregistering_to_another_dir_drops_cached_views(
+            self, spark, tmp_path):
+        # snapshot views are cached by name + version: re-pointing the
+        # name at another table must not keep serving the old one
+        a, b = tmp_path / "a", tmp_path / "b"
+        write_version(spark.range(3).select("id"), a, "overwrite")
+        write_version(spark.range(10, 15).select("id"), b, "overwrite")
+        register_versioned_table(spark, "tt_repoint", a)
+        for sql in ("SELECT sum(id) AS s FROM tt_repoint "
+                    "FOR VERSION AS OF 0",
+                    "SELECT sum(id) AS s FROM tt_repoint"):
+            assert sql_run(spark, sql).preview[0]["s"] == 3
+        register_versioned_table(spark, "tt_repoint", b)
+        for sql in ("SELECT sum(id) AS s FROM tt_repoint "
+                    "FOR VERSION AS OF 0",
+                    "SELECT sum(id) AS s FROM tt_repoint"):
+            assert sql_run(spark, sql).preview[0]["s"] == 60
+
     def test_timestamp_as_of_resolves_commit_stamps(self, spark, tdir):
         _commit_two_versions(spark, tdir)
         register_versioned_table(spark, "tt_t2", tdir)

@@ -9,8 +9,8 @@ skew_probe/scaling_probe recipe, uniform shape), where the heavy
 entries run seconds and compute dominates.
 
 Each (cores, K) cell runs in a FRESH subprocess (one Spark session
-per master; local[8] vs local[32]), warm tables plan-only, codegen
-warm-in run, then min-of-3 collect — the bench methodology.
+per master; local[8] vs local[32]), codegen warm-in run, then
+min-of-3 fresh builds written to the noop sink.
 
 Usage: python tools/core_scaling_probe.py [K] [entries...]
 Writes one JSON line per (entry, cores) and a final ratio table.
@@ -50,9 +50,7 @@ import json, sys, time
 sys.path.insert(0, {repo!r})
 from data_platform_copilot_spark.queries import QUERIES
 from data_platform_copilot_spark.session import get_spark
-from data_platform_copilot_spark.sources import warm_tables
 spark = get_spark("core-scaling", master="local[{cores}]")
-warm_tables(spark, {sf_dir!r}, persist=False)
 (spark.range(256)
  .repartition(int(spark.conf.get("spark.sql.shuffle.partitions")))
  .mapInPandas(lambda it: it, "id long")

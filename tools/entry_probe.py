@@ -1,7 +1,8 @@
 """Per-entry steady-state timing probe (bench methodology, arbitrary
-registry subset): min-of-N collect() after plan-only table warming and
-a codegen warm-in run, printed as one JSON object. Used for the r14
-operator-by-operator before/after evidence on non-headline entries.
+registry subset): min-of-N collect() after a codegen warm-in run, each
+run built fresh from the parquet files, printed as one JSON object.
+Used for the r14 operator-by-operator before/after evidence on
+non-headline entries.
 
 Usage: python tools/entry_probe.py OUT.json entry [entry ...]
 Env:   SPARK_GRAFT_SF_DIR (default sf0.1), PROBE_RUNS (default 5)
@@ -23,9 +24,7 @@ def main() -> None:
     runs = int(os.environ.get("PROBE_RUNS", "5"))
     from data_platform_copilot_spark.queries import QUERIES
     from data_platform_copilot_spark.session import get_spark
-    from data_platform_copilot_spark.sources import warm_tables
     spark = get_spark("entry-probe")
-    warm_tables(spark, sf, persist=False)
     (spark.range(256)
      .repartition(int(spark.conf.get("spark.sql.shuffle.partitions")))
      .mapInPandas(lambda it: it, "id long")

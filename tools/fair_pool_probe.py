@@ -51,7 +51,6 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from data_platform_copilot_spark.queries import QUERIES
-    from data_platform_copilot_spark.sources import warm_tables
 
     master = os.environ.get("SPARK_GRAFT_MASTER", "local[32]")
     spark = (SparkSession.builder.master(master)
@@ -61,8 +60,7 @@ def main() -> None:
              .config("spark.ui.enabled", "false")
              .getOrCreate())
     sc = spark.sparkContext
-    warm_tables(spark, sf_dir)
-    QUERIES[SHORT_QUERY](spark, sf_dir).collect()  # warm plans/codegen
+    QUERIES[SHORT_QUERY](spark, sf_dir).collect()  # warm codegen/JIT
 
     def long_job() -> None:
         sc.setLocalProperty("spark.scheduler.pool", "batch")

@@ -1,7 +1,8 @@
 """Full-registry warm timing sweep — the straggler finder.
 
-Times EVERY registry entry (min-of-2 warm collect() runs — the r10
-bench-sink methodology, see bench.py; tables pre-warmed) at the
+Times EVERY registry entry (min-of-2 collect() runs, each built
+fresh from the parquet files — the r10 bench-sink methodology, see
+bench.py) at the
 given sf dir and prints slowest-first. This is the pass that caught
 the single-row-group scan tax the K-probes can't see (the probe
 dataset unions pre-spread copies, so single-partition scans look
@@ -28,8 +29,6 @@ def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     top_n = int(sys.argv[2]) if len(sys.argv) > 2 else len(QUERIES)
     spark = get_spark("straggler_sweep")
-    from data_platform_copilot_spark.sources import warm_tables
-    warm_tables(spark, sf_dir)
     times: dict[str, object] = {}
     for name, fn in QUERIES.items():
         try:
