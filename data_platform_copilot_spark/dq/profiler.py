@@ -7,7 +7,8 @@ adds a top-5 value histogram.
 
 Spark-first shape: ALL scalar statistics for ALL columns compute in
 ONE ``df.agg(...)`` pass (a single scan + partial aggregation), not
-a per-column loop like the pandas reference. Top-5 histograms for
+a per-column loop like the pandas reference; callers may fold their
+own aggregates into that pass (``extra``). Top-5 histograms for
 every atomic column batch into ONE stacked string-cast job (explode
 to (column, value-as-string) rows -> one groupBy + per-column window
 top-k; the <= 5 winners reparse to native types on the driver), so a
@@ -17,8 +18,14 @@ partial aggregation means the stacked shuffle still carries only
 distinct (column, value) pairs. Non-atomic columns (decimal, nested)
 fall back to one typed histogram job per type.
 
-``exact=False`` switches distinct counts to HyperLogLog++ and
-percentiles to percentile_approx — the 100 TB configuration.
+Distinct counts come from the histogram job: a column's distinct
+count is its number of non-NULL (column, value) groups, a window
+count beside the top-k rank. The scalar pass therefore carries no
+``countDistinct`` (its Expand plan cost 3-4x the rest of the pass on
+a 5.7k-row sample) and the count stays exact at any scale.
+
+``exact=False`` switches percentiles to percentile_approx — the
+100 TB configuration.
 """
 
 from __future__ import annotations
@@ -66,17 +73,28 @@ def _reparse(s: str, dt: T.DataType) -> Any:
     return s
 
 
-def profile_df(df: DataFrame, max_top: int = 5,
-               exact: bool = True) -> dict[str, dict[str, Any]]:
-    """Profile every column of ``df`` (reference profile_df parity)."""
+def _transport(c: Column, dt: T.DataType) -> Column:
+    """The string a value travels as in the stacked histogram job.
+    Spark's string cast tells -0.0 from 0.0 where grouping and
+    ``countDistinct`` do not, so float zeros normalize first."""
+    if isinstance(dt, (T.FloatType, T.DoubleType)):
+        c = F.when(c == 0, F.lit(0).cast(dt)).otherwise(c)
+    return c.cast("string")
+
+
+def profile_df(df: DataFrame, max_top: int = 5, exact: bool = True,
+               extra: dict[str, Column] | None = None,
+               ) -> dict[str, dict[str, Any]]:
+    """Profile every column of ``df`` (reference profile_df parity).
+
+    ``extra`` maps alias -> aggregate Column: each rides the scalar
+    pass, and its value replaces the Column in ``extra``."""
+    extra = {} if extra is None else extra
     aggs: list[Column] = [F.count(F.lit(1)).alias("__total")]
+    aggs += [c.alias(k) for k, c in extra.items()]
     for field in df.schema.fields:
         c, name = F.col(field.name), field.name
         aggs.append(F.sum(c.isNull().cast("long")).alias(f"{name}__nulls"))
-        if exact:
-            aggs.append(F.countDistinct(c).alias(f"{name}__distinct"))
-        else:
-            aggs.append(F.approx_count_distinct(c).alias(f"{name}__distinct"))
         if _is_numeric(field.dataType):
             aggs += [
                 F.min(c).alias(f"{name}__min"),
@@ -107,6 +125,7 @@ def profile_df(df: DataFrame, max_top: int = 5,
 
     stats = df.agg(*aggs).collect()[0].asDict()
     total = stats["__total"]
+    extra.update({k: stats[k] for k in extra})
 
     out: dict[str, dict[str, Any]] = {}
     for field in df.schema.fields:
@@ -115,7 +134,7 @@ def profile_df(df: DataFrame, max_top: int = 5,
             "dtype": field.dataType.simpleString(),
             "count": total,
             "nulls": int(stats[f"{name}__nulls"] or 0),
-            "distinct": int(stats[f"{name}__distinct"] or 0),
+            "distinct": 0,  # all-NULL unless the histogram job has groups
         }
         if _is_numeric(field.dataType):
             pcts = stats.get(f"{name}__pcts") or [None, None]
@@ -147,9 +166,13 @@ def profile_df(df: DataFrame, max_top: int = 5,
     # scan + single shuffle regardless of how many types the schema
     # mixes; the <= max_top surviving strings per column are parsed
     # back to their native type on the driver. String-casting is safe
-    # as a group key here because the cast is injective within one
-    # column's type. Non-atomic columns (decimal/array/struct/...) keep
-    # a per-type job so their values come back natively typed.
+    # as a group key (and its group count as the distinct count)
+    # because, once ``_transport`` folds -0.0 into 0.0, two values of
+    # one column share a string iff grouping deems them equal
+    # (timestamps render in the session time zone, UTC under
+    # ``session.get_spark``). Non-atomic columns (decimal/array/
+    # struct/...) keep a per-type job so their values come back
+    # natively typed.
     from collections import defaultdict
 
     from pyspark.sql import Window as W
@@ -164,19 +187,23 @@ def profile_df(df: DataFrame, max_top: int = 5,
             other_by_type[f.dataType.simpleString()].append(f.name)
 
     def run_topk(stacked: DataFrame) -> list:
-        w = (W.partitionBy("__col")
-             .orderBy(F.desc("__cnt"), F.col("__val").cast("string")))
-        return (stacked.where(F.col("__val").isNotNull())
+        by_col = W.partitionBy("__col")
+        w = by_col.orderBy(F.desc("__cnt"), F.col("__val").cast("string"))
+        rows = (stacked.where(F.col("__val").isNotNull())
                 .groupBy("__col", "__val").agg(F.count("*").alias("__cnt"))
                 .withColumn("__rk", F.row_number().over(w))
+                .withColumn("__distinct", F.count("*").over(by_col))
                 .where(F.col("__rk") <= max_top)
                 .collect())
+        for r in rows:
+            out[r["__col"]]["distinct"] = r["__distinct"]
+        return rows
 
     if atomic:
         dtype_of = {f.name: f.dataType for f in atomic}
         stacked = df.select(F.explode(F.array(*[
             F.struct(F.lit(f.name).alias("__col"),
-                     F.col(f.name).cast("string").alias("__val"))
+                     _transport(F.col(f.name), f.dataType).alias("__val"))
             for f in atomic])).alias("s")).select("s.__col", "s.__val")
         for r in sorted(run_topk(stacked),
                         key=lambda r: (r["__col"], r["__rk"])):

@@ -4,11 +4,20 @@ sample -> profile -> dispatch rules by type; unknown rule type yields
 a failed result (reference src/dq.py:171). Returns the profile, the
 rule results, and a <=50-row sample preview (reference src/dq.py:172).
 
-Fidelity note (SURVEY.md §3.3): the reference runs every check on the
-<=200k-row sample. We preserve that by default (rules run on the
-sampled DataFrame), but ``full_table=True`` runs rules on the whole
-table — the natural Spark improvement, since our rules are aggregate
-pushdowns rather than in-memory pandas.
+Like the reference, every check runs on the <=200k-row sample
+(SURVEY.md §3.3), and every part of the answer describes the SAME
+rows: the sample is materialized once (``sources.registry
+.materialized``), so an unordered ``where ... limit(n)`` over
+multi-file input cannot hand the profile, the rules and the preview
+different rows. Over it, one scalar pass computes the profile and
+every rule's aggregates (``unique`` takes its distinct count from the
+profile's histogram job), one more pass counts every
+``anomaly_zscore`` rule's outliers, and the preview reads the
+materialized rows: at most three Spark jobs, plus one when any
+``anomaly_zscore`` rule is present, whatever the rule count (a
+non-atomic column type adds its own histogram job). The
+public ``check_*`` functions run the same rule math over any frame,
+a full table included.
 """
 
 from __future__ import annotations
@@ -19,17 +28,9 @@ from typing import Any
 
 from pyspark.sql import SparkSession
 
+from ..sources.registry import materialized
+from . import rules as R
 from .profiler import profile_df
-from .rules import (
-    DEFAULT_MAX_AGE_HOURS,
-    DEFAULT_SIGMA,
-    RuleResult,
-    check_anomaly_zscore,
-    check_freshness,
-    check_not_null,
-    check_range,
-    check_unique,
-)
 from .sampler import fetch_table_sample
 
 PREVIEW_ROWS = 50  # reference src/dq.py:172
@@ -42,48 +43,48 @@ class DQRule:
     column: str | None = None
     min: float | None = None
     max: float | None = None
-    max_age_hours: float = DEFAULT_MAX_AGE_HOURS
-    sigma: float = DEFAULT_SIGMA
+    max_age_hours: float = R.DEFAULT_MAX_AGE_HOURS
+    sigma: float = R.DEFAULT_SIGMA
+
+
+def _check(rule: DQRule, now: datetime | None) -> R.Check:
+    if rule.type == "not_null":
+        return R.not_null(rule.column)
+    if rule.type == "unique":
+        return R.unique(rule.column)
+    if rule.type == "range":
+        return R.in_range(rule.column, rule.min, rule.max)
+    if rule.type == "freshness":
+        return R.freshness(rule.column, rule.max_age_hours, now=now)
+    if rule.type == "anomaly_zscore":
+        return R.anomaly_zscore(rule.column, rule.sigma)
+    # unknown rule type -> failed result (reference src/dq.py:171)
+    return R.Check(rule.column, {}, lambda _v: R.RuleResult(
+        rule=f"{rule.type}({rule.column})", passed=False,
+        details={"error": f"unknown rule type: {rule.type}"}))
 
 
 def run_checks(spark: SparkSession, table: str,
                rules: list[DQRule],
                where: str | None = None,
                sample_limit: int | None = None,
-               full_table: bool = False,
                now: datetime | None = None) -> dict[str, Any]:
     """Run profile + rules; returns dict(profile, results, sample_rows)."""
-    sample = fetch_table_sample(spark, table, where, sample_limit)
-    if full_table:
-        target = spark.table(table)
-        if where:
-            from pyspark.sql import functions as F
-            target = target.where(F.expr(where))
-    else:
-        target = sample
+    checks = [_check(rule, now) for rule in rules]
+    with materialized(fetch_table_sample(spark, table, where,
+                                         sample_limit)) as sample:
+        def profiled(chk: R.Check, k: str) -> bool:
+            # the profile counts a top-level column's distinct values;
+            # any other reference keeps the check's own aggregate
+            return k == R.DISTINCT and chk.column in sample.columns
 
-    profile = profile_df(sample)
-
-    results: list[RuleResult] = []
-    for rule in rules:
-        if rule.type == "not_null":
-            results.append(check_not_null(target, rule.column))
-        elif rule.type == "unique":
-            results.append(check_unique(target, rule.column))
-        elif rule.type == "range":
-            results.append(check_range(target, rule.column,
-                                       rule.min, rule.max))
-        elif rule.type == "freshness":
-            results.append(check_freshness(target, rule.column,
-                                           rule.max_age_hours, now=now))
-        elif rule.type == "anomaly_zscore":
-            results.append(check_anomaly_zscore(target, rule.column,
-                                                rule.sigma))
-        else:
-            # unknown rule type -> failed result (reference src/dq.py:171)
-            results.append(RuleResult(
-                rule=f"{rule.type}({rule.column})", passed=False,
-                details={"error": f"unknown rule type: {rule.type}"}))
-
-    sample_rows = sample.limit(PREVIEW_ROWS).toPandas().to_dict(orient="records")
+        fused = {f"__r{i}_{k}": c for i, chk in enumerate(checks)
+                 for k, c in chk.aggs.items() if not profiled(chk, k)}
+        profile = profile_df(sample, extra=fused)
+        values = [{k: profile[chk.column][k] if profiled(chk, k)
+                   else fused[f"__r{i}_{k}"] for k in chk.aggs}
+                  for i, chk in enumerate(checks)]
+        results = R.finish_checks(sample, checks, values)
+        sample_rows = (sample.limit(PREVIEW_ROWS).toPandas()
+                       .to_dict(orient="records"))
     return {"profile": profile, "results": results, "sample_rows": sample_rows}

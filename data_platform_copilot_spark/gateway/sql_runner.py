@@ -14,8 +14,11 @@ Re-implements the reference's validation gateway semantics
 - A3 ``is_safe`` — non-throwing classifier: empty / forbidden
   keywords / non-SELECT / multi-statement / block comments
   (reference src/sql_runner.py:34-51).
-- A4 ``sql_run`` — validate -> plan (EXPLAIN FORMATTED) -> execute
-  -> 20-row preview (reference src/sql_runner.py:54-63).
+- A4 ``sql_run`` — validate -> cap at ``row_limit`` -> EXPLAIN
+  FORMATTED the 20-row preview frame -> execute that same frame
+  (reference src/sql_runner.py:54-63), so Catalyst optimizes and
+  plans each statement once; the returned ``plan`` is the preview's
+  (``CollectLimit min(row_limit, preview_rows)``).
 
 The reference declares ``query_timeout_ms`` but never enforces it
 (reference src/config.py:92, no consumer). We enforce it for real
@@ -128,7 +131,10 @@ def sql_run(spark: SparkSession, outer_sql: str,
     from .time_travel import rewrite_as_of
     sql = rewrite_as_of(spark, sql)
     df = spark.sql(sql).limit(row_limit)
-    plan = _explain_formatted(df)
+    # EXPLAIN the frame that runs: its QueryExecution keeps the
+    # optimized and physical plans, so toPandas plans nothing again
+    preview_df = df.limit(preview_rows)
+    plan = _explain_formatted(preview_df)
 
     group = f"gateway-{uuid.uuid4().hex[:12]}"
     sc = spark.sparkContext
@@ -142,7 +148,7 @@ def sql_run(spark: SparkSession, outer_sql: str,
     watchdog = threading.Thread(target=_watchdog, daemon=True)
     watchdog.start()
     try:
-        preview_pdf = df.limit(preview_rows).toPandas()
+        preview_pdf = preview_df.toPandas()
     except Exception as exc:  # cancelled or failed
         raise IncorrectQuestionError(f"query failed: {exc}") from exc
     finally:

@@ -41,6 +41,7 @@ from .gateway import (
     table_history,
 )
 from .metrics import REGISTRY
+from .sources.registry import materialized
 from .sources.versioned import VersionedTableError
 
 DESCRIPTION = ("PySpark-native data-platform copilot: validated NL->SQL "
@@ -147,9 +148,10 @@ class CopilotService:
     def dq_profile(self, table: str, where: str | None = None,
                    limit: int | None = None) -> dict[str, Any]:
         REGISTRY.inc("dq_profile_requests")
-        sample = fetch_table_sample(self.spark, table, where, limit)
-        prof = profile_df(sample)
-        preview = sample.limit(20).toPandas().to_dict(orient="records")
+        with materialized(fetch_table_sample(self.spark, table, where,
+                                             limit)) as sample:
+            prof = profile_df(sample)
+            preview = sample.limit(20).toPandas().to_dict(orient="records")
         return {"profile": prof, "rows": preview}
 
     def dq_check(self, table: str, rules: list[dict[str, Any]],

@@ -16,6 +16,8 @@ from __future__ import annotations
 
 import functools
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -184,13 +186,28 @@ def materialize_auto(df: DataFrame) -> DataFrame:
     lives until the session ends). Callers returning lazy frames
     have no post-action hook to unpersist from; a long-lived cluster
     service that re-invokes such queries should periodically call
-    ``spark.catalog.clearCache()`` between requests. Local masters
-    (every bench/probe path) take the localCheckpoint branch and do
-    not leak — the r14 bench de-gaming covered exactly that path."""
+    ``spark.catalog.clearCache()`` between requests. Callers that run
+    every action themselves use ``materialized`` instead, which
+    releases on exit. Local masters (every bench/probe path) take
+    the localCheckpoint branch and do not leak — the r14 bench
+    de-gaming covered exactly that path."""
     if _is_local(df.sparkSession):
         return df.localCheckpoint(eager=False)
     from pyspark import StorageLevel
     return df.persist(StorageLevel.MEMORY_AND_DISK)
+
+
+@contextmanager
+def materialized(df: DataFrame) -> Iterator[DataFrame]:
+    """``materialize_auto(df)`` for the scope of a ``with`` block whose
+    actions are the frame's only consumers; on exit the cluster
+    branch's persist is released (a no-op for the local branch, whose
+    checkpoint blocks go with its RDD)."""
+    shared = materialize_auto(df)
+    try:
+        yield shared
+    finally:
+        shared.unpersist()
 
 
 def truncate_lineage(df: DataFrame, eager: bool = True) -> DataFrame:

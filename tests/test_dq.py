@@ -101,7 +101,29 @@ class TestProfiler:
 
     def test_profile_approx_mode(self, dirty):
         prof = profile_df(dirty, exact=False)
-        assert prof["id"]["distinct"] in (2, 3, 4)  # HLL estimate
+        # distinct counts come from the histogram groups: exact in both modes
+        assert prof["id"]["distinct"] == 3
+
+    @pytest.mark.parametrize("exact", [True, False])
+    def test_distinct_from_groups_equals_count_distinct(self, spark, exact):
+        """The string transport must group exactly as countDistinct:
+        -0.0 and 0.0 are one value, NaNs are one value, NULL is none."""
+        from decimal import Decimal
+
+        from pyspark.sql import functions as F
+        nan = float("nan")
+        rows = [(0.0, datetime(2024, 1, 1), "a", Decimal("1.50")),
+                (-0.0, datetime(2024, 1, 1), "a", Decimal("1.5")),
+                (nan, datetime(2024, 1, 2), "b", Decimal("2.25")),
+                (nan, None, "", None),
+                (None, datetime(2024, 1, 2, 0, 0, 0, 1), None, Decimal("0"))]
+        df = spark.createDataFrame(
+            rows, "d double, t timestamp, s string, m decimal(10,2)")
+        prof = profile_df(df, exact=exact)
+        want = df.agg(*[F.countDistinct(c).alias(c)
+                        for c in df.columns]).first().asDict()
+        assert {c: prof[c]["distinct"] for c in df.columns} == want
+        assert want == {"d": 2, "t": 3, "s": 3, "m": 3}
 
     def test_profile_job_count_independent_of_columns(self, spark):
         """Histogram batching: every atomic column shares ONE
@@ -215,3 +237,138 @@ class TestObservedProfile:
         assert by["n_rows"]["passed"] is True
         assert by["nulls_user_id"]["passed"] is False
         assert by["missing_metric"]["passed"] is False
+
+
+class TestFusedRun:
+    """``run_checks`` materializes its sample once and answers the
+    profile, every rule and the preview from those rows."""
+
+    @pytest.fixture(scope="class")
+    def multi_file(self, spark, tmp_path_factory):
+        """A 12-file table whose rows vary in nulls, duplicates and
+        outliers, so two different 40-row samples would disagree."""
+        rows = [(i, None if i % 5 == 0 else i % 9,
+                 1e6 if i % 97 == 0 else float(i % 13), f"k{i % 11}")
+                for i in range(1200)]
+        path = str(tmp_path_factory.mktemp("dq_multi") / "t")
+        (spark.createDataFrame(rows, "id long, g long, v double, s string")
+         .repartition(12).write.parquet(path))
+        from data_platform_copilot_spark.sources.registry import read_parquet
+        read_parquet(spark, path).createOrReplaceTempView("dq_multi")
+        return "dq_multi"
+
+    def test_profile_rules_and_rows_describe_one_sample(self, spark,
+                                                        multi_file):
+        import pandas as pd
+        rules = [DQRule(type="not_null", column="g"),
+                 DQRule(type="unique", column="g"),
+                 DQRule(type="unique", column="s"),
+                 DQRule(type="range", column="v", min=0, max=10),
+                 DQRule(type="anomaly_zscore", column="v", sigma=1.0)]
+        out = run_checks(spark, multi_file, rules, where="id % 2 = 0",
+                         sample_limit=40)
+        prof, res = out["profile"], {r.rule: r.details
+                                     for r in out["results"]}
+        # the limit is below the preview size: sample_rows IS the sample
+        pdf = pd.DataFrame(out["sample_rows"])
+        assert len(pdf) == 40 and (pdf["id"] % 2 == 0).all()
+        for name in ("not_null(g)", "unique(g)", "unique(s)", "range(v)"):
+            assert res[name]["total"] == prof["g"]["count"] == 40
+        assert res["not_null(g)"]["nulls"] == pdf["g"].isna().sum()
+        assert prof["g"]["nulls"] == pdf["g"].isna().sum()
+        assert res["unique(g)"]["distinct"] == pdf["g"].nunique()
+        assert prof["g"]["distinct"] == pdf["g"].nunique()
+        assert res["unique(s)"]["distinct"] == pdf["s"].nunique()
+        assert res["range(v)"]["violations"] == (
+            (pdf["v"] < 0) | (pdf["v"] > 10)).sum()
+        v = pdf["v"]
+        z = ((v - v.mean()) / v.std(ddof=0)).abs()
+        assert res["anomaly_zscore(v)"]["outliers"] == (z > 1.0).sum()
+        assert res["anomaly_zscore(v)"]["n"] == v.notna().sum()
+
+    @pytest.mark.parametrize("rules,budget", [
+        ([DQRule(type="not_null", column="o_custkey")], 3),
+        ([DQRule(type="not_null", column="o_custkey"),
+          DQRule(type="unique", column="o_orderkey"),
+          DQRule(type="unique", column="o_orderstatus"),
+          DQRule(type="range", column="o_totalprice", min=0, max=1e5),
+          DQRule(type="freshness", column="o_orderdate"),
+          DQRule(type="bogus", column="o_custkey")], 3),
+        ([DQRule(type="anomaly_zscore", column="o_totalprice"),
+          DQRule(type="anomaly_zscore", column="o_custkey", sigma=1.0),
+          DQRule(type="not_null", column="o_custkey"),
+          DQRule(type="unique", column="o_orderkey"),
+          DQRule(type="range", column="o_totalprice", min=0, max=1e5),
+          DQRule(type="freshness", column="o_orderdate")], 4),
+    ], ids=["one_rule", "six_rules", "six_rules_two_zscore"])
+    def test_job_budget_independent_of_rule_count(self, spark, sf_dir,
+                                                  rules, budget):
+        """Fused scalar pass + histogram job + preview, plus one
+        outlier pass shared by every anomaly_zscore rule (the per-rule
+        formulation launched 7 jobs for 4 rules)."""
+        from data_platform_copilot_spark.sources import register_testdata
+        from tests.test_queries_oracle import _jobs_submitted
+        register_testdata(spark, sf_dir, ("orders",))
+        before = _jobs_submitted(spark)
+        out = run_checks(spark, "orders", rules, where="o_orderkey > 10",
+                         sample_limit=400)
+        jobs = _jobs_submitted(spark) - before
+        assert len(out["results"]) == len(rules)
+        assert jobs <= budget, f"{jobs} jobs for {len(rules)} rules"
+
+    def test_fused_results_equal_standalone_checks(self, spark, dirty):
+        """The fused run and the public check_* share each rule's math."""
+        dirty.createOrReplaceTempView("dq_dirty")
+        now = datetime(2024, 1, 5, 12, 0, tzinfo=timezone.utc)
+        out = run_checks(spark, "dq_dirty", [
+            DQRule(type="not_null", column="id"),
+            DQRule(type="unique", column="id"),
+            DQRule(type="range", column="v", min=0, max=100),
+            DQRule(type="freshness", column="ts", max_age_hours=24),
+            DQRule(type="anomaly_zscore", column="v", sigma=2.0),
+        ], now=now)
+        alone = [check_not_null(dirty, "id"), check_unique(dirty, "id"),
+                 check_range(dirty, "v", 0, 100),
+                 check_freshness(dirty, "ts", 24, now=now),
+                 check_anomaly_zscore(dirty, "v", 2.0)]
+        # mean/std may differ in the last ulps: the aggregation tree
+        # over the materialized sample differs from the frame's own
+        for got, want in zip(out["results"], alone):
+            assert (got.rule, got.passed) == (want.rule, want.passed)
+            assert got.details == pytest.approx(want.details, rel=1e-12)
+
+    def test_cluster_branch_releases_the_sample(self, spark, sf_dir,
+                                                tmp_path, monkeypatch):
+        """On clusters the sample is persisted; run_checks and
+        dq_profile unpersist it on exit, so repeated requests leave
+        the CacheManager as they found it."""
+        from data_platform_copilot_spark.chain import StubProvider
+        from data_platform_copilot_spark.service import CopilotService
+        from data_platform_copilot_spark.sources import register_testdata
+        from data_platform_copilot_spark.sources import registry
+        from tests.test_sharing import _cache_entries
+        register_testdata(spark, sf_dir, ("events",))
+        svc = CopilotService(spark, StubProvider(), str(tmp_path / "c"))
+        monkeypatch.setattr(registry, "_is_local", lambda _spark: False)
+        persisted = []
+        orig = registry.materialize_auto
+
+        def spying(df):
+            shared = orig(df)
+            persisted.append(shared.storageLevel.useMemory)
+            return shared
+
+        monkeypatch.setattr(registry, "materialize_auto", spying)
+        before = _cache_entries(spark)
+        try:
+            for _ in range(3):
+                run_checks(spark, "events",
+                           [DQRule(type="not_null", column="user_id")],
+                           sample_limit=100)
+                out = svc.dq_profile("events", limit=100)
+                assert len(out["rows"]) == 20
+            assert _cache_entries(spark) == before
+        finally:
+            spark.catalog.clearCache()
+        # the cluster branch really ran: every sample was persisted
+        assert persisted == [True] * 6

@@ -101,3 +101,51 @@ class TestSqlRun:
     def test_rejects_ddl(self, spark):
         with pytest.raises(IncorrectQuestionError):
             sql_run(spark, "DROP TABLE region")
+
+
+def _collect_limit(plan: str) -> int:
+    """The CollectLimit argument of an EXPLAIN FORMATTED plan."""
+    import re
+    m = re.search(r"\) CollectLimit\n(?:.*\n)*?Arguments: (\d+)", plan)
+    assert m, plan
+    return int(m.group(1))
+
+
+class TestSqlRunPlansOnce:
+    def test_plan_is_the_preview_frames(self, spark, sf_dir):
+        from data_platform_copilot_spark.sources import register_testdata
+        register_testdata(spark, sf_dir, ("customer",))
+        res = sql_run(spark, "SELECT c_custkey FROM customer",
+                      row_limit=7, preview_rows=5)
+        assert _collect_limit(res.plan) == 5
+        assert len(res.preview) == 5
+        assert res.df.count() == 7  # the returned frame keeps row_limit
+        res = sql_run(spark, "SELECT c_custkey FROM customer", row_limit=3)
+        assert _collect_limit(res.plan) == 3 and len(res.preview) == 3
+
+    def test_explained_frame_is_the_executed_frame(self, spark, sf_dir,
+                                                   monkeypatch):
+        """One DataFrame is explained and collected, so its
+        QueryExecution optimizes and plans the statement once."""
+        from pyspark.sql.classic.dataframe import DataFrame
+
+        from data_platform_copilot_spark.gateway import sql_runner
+        from data_platform_copilot_spark.sources import register_testdata
+        register_testdata(spark, sf_dir, ("region",))
+        explained, executed = [], []
+        orig_explain, orig_to_pandas = (sql_runner._explain_formatted,
+                                        DataFrame.toPandas)
+
+        def explain(df):
+            explained.append(df)
+            return orig_explain(df)
+
+        def to_pandas(self):
+            executed.append(self)
+            return orig_to_pandas(self)
+
+        monkeypatch.setattr(sql_runner, "_explain_formatted", explain)
+        monkeypatch.setattr(DataFrame, "toPandas", to_pandas)
+        sql_run(spark, "SELECT r_name FROM region")
+        assert len(explained) == len(executed) == 1
+        assert explained[0] is executed[0]

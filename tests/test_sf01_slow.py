@@ -140,6 +140,8 @@ def test_no_entry_plans_a_python_row_udf_or_cartesian(spark):
 #             bounded by the source/domain alphabet)
 #   spec    — §2.B SQL-surface window-function spec entries over a
 #             monthly aggregate (bounded by the month range)
+#   topm    — rank window over the rows that survive a top-m limit
+#             (rows bounded by m)
 GLOBAL_WINDOW_ALLOWLIST: dict[str, str] = {
     "acf_daily_value": "series",
     "burst_detection_hourly": "series",
@@ -179,6 +181,12 @@ GLOBAL_WINDOW_ALLOWLIST: dict[str, str] = {
                             " distinct-value histogram)",
     "training_order_interleave": "mix (apportionment frame + B=32"
                                  " bucket offsets; rank is two-phase)",
+    "pareto_frontier_users": "hist (pareto_frontier_2d's running max"
+                             " over its one-row-per-bucket summary)",
+    "quantile_normalize_doclen": "hist (the pooled bucketed_global_rank's"
+                                 " offsets over per-bucket counts)",
+    "ann_margin_scores": "topm (margin_topk ranks the m=20 limited"
+                         " pairs)",
 }
 
 
